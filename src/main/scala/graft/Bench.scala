@@ -107,11 +107,12 @@ object Bench {
     }.mkString("[", ",", "]")
     // "constr" (ADDITIVE, r15 verdict item 2's observability mandate):
     // per-query CONSTRUCTION seconds (DataFrame build incl. any eager
-    // materializes, min across the same passes), so a flat 8-vs-32-core
-    // ratio is attributable in-band — construction is driver-side Catalyst
-    // work that no core count parallelizes, while (total - constr) is the
-    // action. The timed total is unchanged: construction + action are the
-    // same spans they always were, only stamped separately here.
+    // materializes), taken from the pass that set the min total
+    // (`fastestPass`), so a flat 8-vs-32-core ratio is attributable
+    // in-band — construction is driver-side Catalyst work that no core
+    // count parallelizes, while (total - constr) is the action. The timed
+    // total is unchanged: construction + action are the same spans they
+    // always were, only stamped separately here.
     val constrJson =
       if (constr.isEmpty) ""
       else constr.sortBy(_._1)
@@ -119,6 +120,13 @@ object Bench {
         .mkString(""","constr":{""", ",", "}")
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"queries":$qs$constrJson,"passes":$passesJson,"failed":$failedJson,"sf":"$sfName"}"""
   }
+
+  /** The pass that sets a query's reported time: of its per-pass
+    * (total, construction) spans, the one with the smallest total. Its
+    * construction span is the reported `constr`, so total = constr + action
+    * holds within that one pass. */
+  def fastestPass(spans: Seq[(Double, Double)]): (Double, Double) =
+    spans.minBy(_._1)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -216,7 +224,7 @@ object Bench {
     }
     val constr = names.zipWithIndex.collect {
       case ((name, _), i) if timed.map(_(i)).forall(_._3) =>
-        (name, timed.map(_(i)._2).min)
+        (name, fastestPass(timed.map(t => (t(i)._1, t(i)._2)))._2)
     }
     val failed = runs.collect { case (n, _, false) => n }
     val results = runs.map { case (n, t, ok) => n -> (if (ok) t else -1.0) }

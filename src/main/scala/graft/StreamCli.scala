@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, date_format, timestamp_millis}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.functions.{col, date_format, lit, timestamp_millis}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.LongType
 
 import graft.normalize.Normalizers
 import graft.streaming.{ConsoleSink, JdbcSink, StreamAssembly}
@@ -128,11 +130,19 @@ object StreamCli {
       Seq(rewrite(ex, mk))
     }
 
+  /** The `ts_ingest_ms` every branch of [[buildUnified]] carries: a typed
+    * NULL that [[run]]'s fan-out replaces with the micro-batch's own
+    * timestamp. It must not change between triggers — see [[run]]. */
+  private val ingestPlaceholder: Column = lit(null).cast(LongType)
+
   /** One normalized stream per pair, unioned — the reference's N asyncio
     * tasks into one shared writer (`stream.py:169-188`). `hlNoCatchup`
     * models `--hl-no-catchup` (`stream.py:42-43,152-158`): only files
     * younger than an hour relative to the newest are picked up, i.e. tail
-    * the latest hour instead of backfilling the whole directory. */
+    * the latest hour instead of backfilling the whole directory.
+    *
+    * Every row carries [[ingestPlaceholder]] as `ts_ingest_ms`; [[run]]
+    * stamps it per micro-batch. */
   def buildUnified(spark: SparkSession, framesRoot: String,
       pairs: Seq[(String, String)], hlNoCatchup: Boolean = false): DataFrame =
     pairs.map { case (ex, mk) =>
@@ -140,14 +150,14 @@ object StreamCli {
         case "hyperliquid" =>
           StreamAssembly.hyperliquidNormalizedStream(
             StreamAssembly.hyperliquidFileStream(spark, s"$framesRoot/hyperliquid",
-              catchUp = !hlNoCatchup), mk)
+              catchUp = !hlNoCatchup), mk, ingestMs = ingestPlaceholder)
         case _ =>
           val raw = StreamAssembly.wsReplayStream(spark, s"$framesRoot/$ex.jsonl")
           ex match {
-            case "binance" => Normalizers.binance(raw, mk)
-            case "aster" => Normalizers.aster(raw, mk)
-            case "bybit" => Normalizers.bybit(raw, mk)
-            case "okx" => Normalizers.okx(raw, mk)
+            case "binance" => Normalizers.binance(raw, mk, ingestPlaceholder)
+            case "aster" => Normalizers.aster(raw, mk, ingestPlaceholder)
+            case "bybit" => Normalizers.bybit(raw, mk, ingestPlaceholder)
+            case "okx" => Normalizers.okx(raw, mk, ingestPlaceholder)
             case other =>
               throw new IllegalArgumentException(s"unknown exchange: $other")
           }
@@ -169,6 +179,20 @@ object StreamCli {
     * url it falls back to a parquet append (the columnar stand-in the
     * batch queries read; the reference instead exits — `stream.py:172` —
     * but this sandbox has no PG server to point a DSN at).
+    *
+    * `ts_ingest_ms` is stamped here, once per micro-batch, with the
+    * `batchTimestampMs` Spark recorded in that batch's offset-log entry
+    * (`<ckpt>/offsets/<batchId>`): the value `current_timestamp()` yields
+    * inside the batch, and the one a checkpoint replay of the batch reuses.
+    * The streaming plan itself carries only [[ingestPlaceholder]]. Spark
+    * inlines a long literal into the generated Java source and
+    * `current_timestamp()` becomes such a literal each trigger, so a plan
+    * that carried it would change every batch and miss the codegen cache:
+    * one compile per trigger per union branch, on the driver and again in
+    * the tasks. The fan-out also coalesces the batch to one partition per
+    * core (`defaultParallelism`) before persisting it, so the console
+    * collect and each sink write run one task per core instead of one per
+    * source range and state shard.
     *
     * Returns (csv rows, pg-or-parquet rows) read back from the sinks. */
   def run(spark: SparkSession, args: CliArgs): (Long, Long) = {
@@ -193,11 +217,18 @@ object StreamCli {
     else if (writePg)
       println(s"[cli] no --pg-url: PG sink modeled as parquet append at $pqDir")
     val lineCol = ConsoleSink.line(colors = !args.noColor)
+    lazy val offsetLog = new OffsetSeqLog(spark, s"$ckpt/offsets")
     val q = unified.writeStream
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(args.triggerMs))
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val batch = df.persist()
+        // the offset log entry is written before the batch runs
+        val stampMs = offsetLog.offsetSeqMetadataForBatchId(batchId)
+          .getOrElse(sys.error(s"no offset-log metadata for batch $batchId"))
+          .batchTimestampMs
+        val batch = df.coalesce(spark.sparkContext.defaultParallelism)
+          .withColumn("ts_ingest_ms", lit(stampMs))
+          .persist()
         try {
           // WriterShim order: print, then forward (stream.py:64-87); the
           // collect is presentation I/O bounded per micro-batch

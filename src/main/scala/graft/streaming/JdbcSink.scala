@@ -3,6 +3,8 @@ package graft.streaming
 import java.sql.{DriverManager, SQLException}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.jdbc.graftbridge.DerbyVarcharNulls
 
 /** JDBC sink with DDL bootstrap — the Postgres writer's table/index
   * bootstrap and batched append (liq-stream `writer_pg.py:23-57,95-137`)
@@ -84,13 +86,21 @@ object JdbcSink {
     * X0Y32 = object exists, X0Y68 = schema/object exists. Key columns are
     * VARCHAR (LONG VARCHAR is not indexable in Derby); the `raw` payload is
     * LONG VARCHAR (32,700 chars) so whole WS frames longer than 4 KB don't
-    * fail the insert. */
+    * fail the insert. Appends go through [[DerbyVarcharNulls]]. */
   case object Derby extends SqlDialect {
     val textType = "VARCHAR(4096)"
     val longTextType = "LONG VARCHAR"
     val ifNotExists = ""
     val alreadyExistsStates = Set("X0Y32", "X0Y68")
     val quote = "\""
+  }
+
+  /** Swaps Spark's Derby dialect for [[DerbyVarcharNulls]] in the JVM-wide
+    * registry, once, before the first Derby append: with the built-in one, a
+    * NULL `side` (OKX net-position mode) failed the whole micro-batch. */
+  private lazy val useDerbyVarcharNulls: Unit = {
+    JdbcDialects.unregisterDialect(JdbcDialects.get("jdbc:derby:"))
+    JdbcDialects.registerDialect(DerbyVarcharNulls.dialect)
   }
 
   /** Unified-schema DDL — port of `writer_pg.py:23-36` (types) and `:38-57`
@@ -177,11 +187,13 @@ object JdbcSink {
     * caps connections like the reference's pool max of 10. */
   def appendBatch(df: DataFrame, url: String, table: String,
       props: java.util.Properties, batchSize: Int = 500,
-      maxConnections: Int = 10, dialect: SqlDialect): Unit =
+      maxConnections: Int = 10, dialect: SqlDialect): Unit = {
+    if (dialect == Derby) useDerbyVarcharNulls
     df.coalesce(maxConnections)
       .write.mode("append")
       .option("batchsize", batchSize)
       .jdbc(url, table, withDialectProps(props, dialect))
+  }
 
   /** Exactly-once micro-batch append: a retried batch REPLACES its own
     * rows instead of duplicating them. Structured Streaming re-runs a

@@ -22,8 +22,20 @@ import graft.normalize.Normalizers
   *  - the console+CSV+PG fan-out behind one queue (`stream.py:47-87`) is one
   *    persisted micro-batch written to N sinks in one foreachBatch;
   *  - delivery: the reference drops failed batches (at-most-once,
-  *    `writer_pg.py:211-215`); foreachBatch + checkpoint gives at-least-once
-  *    into idempotent sinks — a deliberate upgrade, documented here.
+  *    `writer_pg.py:211-215`); foreachBatch + checkpoint re-runs a failed
+  *    micro-batch with the same batch id (at-least-once). Only the JDBC sink
+  *    replaces a replayed batch's rows
+  *    ([[JdbcSink.appendBatchExactlyOnce]]); the CSV and parquet sinks here
+  *    append, so a batch replayed after a crash between two sinks
+  *    duplicates its rows in the sinks it had already reached.
+  *  - `ts_ingest_ms`: a streaming plan must not carry a literal that changes
+  *    every trigger. Spark turns `current_timestamp()` into a long literal
+  *    per batch and inlines it into the generated Java source, so such a
+  *    plan misses the codegen cache: one compile per trigger per branch of
+  *    the union. The normalizers therefore take the stamp as a parameter;
+  *    `StreamCli.run` passes a constant placeholder and stamps each
+  *    micro-batch in its fan-out with the batch's `batchTimestampMs` from
+  *    the offset log.
   *
   * At scale: sources partition by file; the dedup/window state lives in the
   * state store partitioned by key (spark.sql.shuffle.partitions state
@@ -80,14 +92,18 @@ object StreamAssembly {
 
   /** Streaming Hyperliquid normalization with watermark-bounded dedup: the
     * exact semantics of the reference's ring (first occurrence wins, state
-    * bounded), with the bound expressed in event time instead of key count. */
+    * bounded), with the bound expressed in event time instead of key count.
+    * `ingestMs` becomes `ts_ingest_ms`; the default, the trigger time, is a
+    * new literal every batch (see the header), so a caller that stamps in
+    * its sink passes a constant here, as `StreamCli.buildUnified` does. */
   def hyperliquidNormalizedStream(rawStream: DataFrame, market: String = "usdc",
-      minAbsSz: Double = 0.0, watermark: String = "10 minutes"): DataFrame = {
+      minAbsSz: Double = 0.0, watermark: String = "10 minutes",
+      ingestMs: Column = unix_millis(current_timestamp())): DataFrame = {
     val pairs = Normalizers.hyperliquidPairs(rawStream, minAbsSz)
       .withColumn("ts_event", timestamp_millis(col("ts_ms")))
       .withWatermark("ts_event", watermark)
       .dropDuplicatesWithinWatermark("tid", "taker", "coin")
-    finishUnified(pairs, market)
+    finishUnified(pairs, market, ingestMs)
   }
 
   /** Any normalized stream → 1-minute tumbling liquidation dashboard
@@ -2460,7 +2476,8 @@ object StreamAssembly {
 
   /** Project the pair-stage columns to the unified schema (streaming twin of
     * the batch normalizer's finish). */
-  private def finishUnified(pairs: DataFrame, market: String): DataFrame = {
+  private def finishUnified(pairs: DataFrame, market: String,
+      ingestMs: Column): DataFrame = {
     val dirLower = lower(col("fill.dir"))
     val price = coalesce(col("fill.px").try_cast("double"), lit(0.0))
     val qty = abs(coalesce(col("fill.sz").try_cast("double"), lit(0.0)))
@@ -2476,7 +2493,7 @@ object StreamAssembly {
       price.as("price"),
       when(price =!= 0 && qty =!= 0, price * qty).as("notional"),
       col("ts_ms").as("ts_exch_ms"),
-      unix_millis(current_timestamp()).as("ts_ingest_ms"),
+      ingestMs.as("ts_ingest_ms"),
       col("fill_raw").as("raw"))
   }
 }

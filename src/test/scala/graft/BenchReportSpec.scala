@@ -93,6 +93,16 @@ class BenchReportSpec extends AnyFunSuite {
     assert(!Bench.fullJson(rs, Nil, "sf0.1").contains("constr"))
   }
 
+  test("constr comes from the pass that set the min total") {
+    // (total, constr) per pass: the fastest pass (2.0) built slowly (1.5);
+    // a slower pass built fastest (0.2). Mixing the two would report an
+    // action of 1.8 s that no pass ran.
+    val spans = Seq((3.0, 0.5), (2.0, 1.5), (2.5, 0.2))
+    assert(Bench.fastestPass(spans) == ((2.0, 1.5)))
+    val (total, constr) = Bench.fastestPass(spans)
+    assert(total - constr == 0.5, "total = constr + action within one pass")
+  }
+
   test("full detail json stamps load averages and per-pass times") {
     val rs = Seq("a" -> 1.0, "b" -> 2.5)
     val passTimes = Seq(Seq("a" -> 1.2, "b" -> 2.5), Seq("a" -> 1.0, "b" -> 9.9))

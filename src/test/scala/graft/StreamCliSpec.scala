@@ -1,8 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, date_format, timestamp_millis}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.normalize.Fixtures
 
@@ -12,6 +18,119 @@ import graft.normalize.Fixtures
 class StreamCliSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** A capture that drains in `batches` micro-batches: each WS file holds
+    * `batches` blocks of 1000 frames (the source's pacing per batch), every
+    * block the exchange's fixture frames padded with pong heartbeats, which
+    * advance the offset but emit no rows; Hyperliquid gets one hour-file. */
+  private def paddedCapture(batches: Int): String = {
+    val root = tmp("cli_padded_frames")
+    Seq("binance" -> Fixtures.binance, "aster" -> Fixtures.aster,
+      "bybit" -> Fixtures.bybit, "okx" -> Fixtures.okx).foreach { case (ex, fx) =>
+      val block = fx ++ Seq.fill(1000 - fx.size)("""{"op":"pong"}""")
+      Files.write(Paths.get(s"$root/$ex.jsonl"),
+        Seq.fill(batches)(block).flatten.mkString("\n").getBytes)
+    }
+    Files.createDirectories(Paths.get(s"$root/hyperliquid"))
+    Files.write(Paths.get(s"$root/hyperliquid/hour1.json"),
+      Fixtures.hyperliquid.mkString("", "\n", "\n").getBytes)
+    root
+  }
+
+  /** `batchTimestampMs` of every micro-batch in a checkpoint's offset log,
+    * read from the files themselves (line 1 the version, line 2 the batch
+    * metadata as JSON). */
+  private def batchTimestamps(ckpt: String): Map[Long, Long] = {
+    val mapper = new ObjectMapper
+    new java.io.File(s"$ckpt/offsets").listFiles()
+      .filter(_.getName.forall(_.isDigit)).map { f =>
+        val meta = Files.readAllLines(f.toPath).get(1)
+        f.getName.toLong -> mapper.readTree(meta).get("batchTimestampMs").asLong
+      }.toMap
+  }
+
+  /** Runs the CLI and returns, per micro-batch id, how many classes Spark's
+    * code generator compiled since the previous batch's progress event. */
+  private def compilesPerBatch(args: StreamCli.CliArgs): Seq[(Long, Long)] = {
+    val samples = new ConcurrentLinkedQueue[(Long, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        samples.add((e.progress.batchId,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount)): Unit
+      override def onQueryIdle(e: StreamingQueryListener.QueryIdleEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      StreamCli.run(spark, args)
+      // progress events reach the listener bus asynchronously
+      val committed = new java.io.File(s"${args.outdirRoot}/ckpt/commits")
+        .listFiles().count(_.getName.forall(_.isDigit))
+      val deadline = System.currentTimeMillis() + 10000
+      while (samples.size < committed && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally spark.streams.removeListener(listener)
+    val sorted = samples.asScala.toSeq.sortBy(_._1)
+    sorted.zip(sorted.drop(1)).map { case ((_, c0), (id, c1)) => (id, c1 - c0) }
+  }
+
+  test("codegen: steady micro-batches compile a constant number of classes, whatever the union width") {
+    // a literal that changes every trigger (the ingest stamp) would make
+    // every branch of the union recompile every batch; batches 0 and 1
+    // legitimately compile (the first plan, then the plan once the
+    // Hyperliquid backfill is drained), so the guard starts at batch 2
+    def steady(args: StreamCli.CliArgs): Seq[Long] = {
+      val perBatch = compilesPerBatch(args)
+      assert(perBatch.count(_._1 >= 2) >= 3, s"too few micro-batches: $perBatch")
+      perBatch.collect { case (id, n) if id >= 2 => n }
+    }
+    val url = "jdbc:derby:memory:cli_codegen;create=true"
+    def args(pairs: Seq[(String, String)], table: String) = StreamCli.CliArgs(
+      streams = pairs.map { case (ex, mk) => s"$ex:$mk" }.mkString(","),
+      framesRoot = paddedCapture(6), outdirRoot = tmp("cli_codegen_out"),
+      triggerMs = 1000L, pgUrl = url, pgTable = table, noColor = true)
+    val wide = steady(args(StreamCli.allPairs, "liq_cg_wide"))
+    val narrow = steady(args(Seq("binance" -> "usdt"), "liq_cg_narrow"))
+    info(s"classes compiled per steady batch: 8 pairs $wide, 1 pair $narrow")
+    // compared as means: a progress event the listener handles after the
+    // next batch has started moves compiles between neighbouring batches,
+    // never in or out of the steady run. A steady batch still compiles
+    // the two stages holding a per-batch literal (the stamp and the JDBC
+    // batch id), once on the driver and once in a task.
+    def mean(xs: Seq[Long]) = xs.sum.toDouble / xs.size
+    val bound = 6.0
+    assert(mean(wide) <= bound, s"8-pair union, classes per steady batch: $wide")
+    assert(mean(narrow) <= bound, s"1-pair stream, classes per steady batch: $narrow")
+    assert(mean(wide) <= mean(narrow) + 1,
+      s"compiles grow with the union width: 8 pairs $wide vs 1 pair $narrow")
+  }
+
+  test("ts_ingest_ms is the batch's batchTimestampMs in CSV and JDBC; day follows it") {
+    val out = tmp("cli_stamp_out")
+    val url = "jdbc:derby:memory:cli_stamp;create=true"
+    StreamCli.run(spark, StreamCli.CliArgs(all = true,
+      framesRoot = paddedCapture(3), outdirRoot = out, triggerMs = 100L,
+      pgUrl = url, pgTable = "liq_stamp", noColor = true))
+    val stamps = batchTimestamps(s"$out/ckpt")
+    val jdbc = spark.read.jdbc(url, "liq_stamp", new java.util.Properties())
+      .select("batch_id", "ts_ingest_ms").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(jdbc.map(_._1).distinct.length >= 3, "rows from several batches")
+    jdbc.foreach { case (b, ts) =>
+      assert(ts == stamps(b), s"batch $b row stamped $ts, offset log says ${stamps(b)}")
+    }
+    // CSV carries no batch id: per stamp, it holds exactly the rows the
+    // JDBC sink holds for the batch with that timestamp
+    val byStamp = jdbc.groupBy(_._2).map { case (ts, rs) => ts -> rs.length.toLong }
+    val csv = spark.read.option("header", "true").csv(s"$out/csv")
+      .select(col("ts_ingest_ms").cast("long").as("ts"),
+        col("day").cast("string").as("day"))
+    assert(csv.groupBy("ts").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == byStamp)
+    assert(csv.filter(col("day") =!=
+      date_format(timestamp_millis(col("ts")), "yyyy-MM-dd")).count() == 0)
+  }
 
   test("resolveStreams: --all roster, ex:mk list, single pair, market rewrites") {
     import StreamCli._

@@ -132,6 +132,25 @@ class JdbcSinkSpec extends SparkSpec {
     assert(back.filter(col("batch_id") === 2L).count() == 2 * n)
   }
 
+  test("derby: a NULL side (OKX net-position mode) appends and reads back as NULL") {
+    // Spark's own Derby dialect binds a NULL string as CLOB, which Derby
+    // refuses for the VARCHAR side column: the whole batch used to fail
+    val tbl = "liq_null_side"
+    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby, withBatchId = true)
+    import spark.implicits._
+    val net = """{"arg":{"channel":"liquidation-orders","instType":"SWAP"},"data":[{"instType":"SWAP","instId":"ETH-USDT-SWAP","details":[{"posSide":"net","side":"sell","bkPx":"3000","sz":"4","ts":"1710000000123"}]}]}"""
+    val unified = Normalizers.okx(Seq(net).toDF("raw"), "usdt",
+      ingestMs = org.apache.spark.sql.functions.lit(0L))
+    assert(unified.filter(col("side").isNull).count() == 1)
+    JdbcSink.appendBatchExactlyOnce(unified, 7L, url, tbl, props,
+      dialect = JdbcSink.Derby)
+    val back = spark.read.jdbc(url, tbl, props).collect()
+    assert(back.length == 1)
+    val r = back.head
+    assert(r.isNullAt(r.fieldIndex("side")))
+    assert(r.getAs[String]("symbol") == "ETH-USDT-SWAP" && r.getAs[Long]("batch_id") == 7L)
+  }
+
   test("derby: raw frames longer than 4 KB insert (LONG VARCHAR payload column)") {
     // real WS frames (a full !forceOrder@arr array) routinely exceed 4 KB —
     // the payload column must not carry a VARCHAR(4096) bound
